@@ -1,19 +1,27 @@
 """Structured Streaming CDC consumption — the reference's daemon leg.
 
 Re-expresses ``src/process_insert_update_weather_data.py:166-187`` (the
-change-stream loop) as ``readStream → foreachBatch(merge)``:
+change-stream loop) as ``readStream → foreachBatch(merge)``, one pass
+and ONE target commit per micro-batch:
 
 - T1 dispatch: one batch split by ``operation_type`` instead of a
   per-event ``if`` ladder; unknown ops go to a dead-letter sink instead
   of ``os._exit(1)`` (the reference's poison-event halt, ``:184-187``).
+- FK tag: the batch is left-joined ONCE to the places dim's distinct
+  key set and pinned with an ``__orphan`` flag; every FK decision of
+  both paths (reference ``check_foreign_key``, ``:66-79``) is a filter
+  on that flag, and FK violations go to a dead-letter sink.
 - insert path (``insert_row``, ``:97-127``): within-batch dedup → PK
-  anti-join vs target → FK semi-join vs dim (violations → DLQ) →
-  flatten → append. 2-3 RPCs/record become one joined batch.
+  anti-join vs target → FK-orphans dead-lettered. 2-3 RPCs/record
+  become one joined batch.
 - update path (``update_row``, ``:131-162``): last-write-wins collapse
-  → upsert merge (anti-join old out, union new) scoped to the hive
-  partitions that contain updated keys, committed with dynamic
-  partition overwrite. Updates whose key is absent are inserts (the
-  reference's upsert fallback, ``:133-136``).
+  of the FK-valid updates. Updates whose key is absent are inserts
+  (the reference's upsert fallback, ``:133-136``), and an update in the
+  same batch as an insert of the same key wins.
+- both paths land in one upsert merge scoped to the hive partitions
+  that contain an inserted or updated key, committed with one dynamic
+  partition overwrite — a failure before that commit leaves the target
+  untouched (the commit's per-bucket directory swap is not atomic).
 - delete path: deliberately ignored (``README.md:15`` — lake cleanup
   must not delete warehouse rows).
 - T3 effectively-once: the PK anti-join makes re-delivered inserts
@@ -26,23 +34,23 @@ BigQuery was the state store) — no driver-side state, so a 1000-way
 parallel ``foreachBatch`` works unchanged.
 
 **Physical layout (100 TB design).** The target is hive-partitioned by
-``part_bucket = pmod(xxhash64(id), N_BUCKETS)`` — a deterministic
-function of the merge key. A micro-batch with k updated keys therefore
-touches at most min(k, N_BUCKETS) partitions; the merge reads ONLY
-those partitions (partition-pruned scan) and rewrites ONLY those
-partitions (dynamic partition overwrite). A 100-row update batch
-rewrites ~100 partition-files, never the whole fact table. A lakehouse
-table format would turn the per-partition file swap into a
-metadata-only MERGE commit; the partition scoping logic is identical.
-The bucket column is physical layout, not schema: ``read_target``
-drops it, and the write paths recompute it from ``id``.
+``part_bucket = pmod(xxhash64(id), N_BUCKETS)`` (:func:`bucket_expr`) —
+a deterministic function of the merge key. A micro-batch with k
+inserted or updated keys therefore touches at most min(k, N_BUCKETS)
+partitions; the merge reads ONLY those partitions (partition-pruned
+scan) and rewrites ONLY those partitions (dynamic partition
+overwrite), one file per bucket. A lakehouse table format would turn
+the per-partition file swap into a metadata-only MERGE commit; the
+partition scoping logic is identical. The bucket column is physical
+layout, not schema: ``read_target`` drops it, and the write path
+recomputes it from ``id``.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.dedup import (
@@ -51,10 +59,15 @@ from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.opera
 from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.flatten import (
     flatten_weather,
 )
-from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.integrity import (
+
+# not called here (every FK decision is a filter on the pinned batch's
+# __orphan flag); kept importable from this module, where tracing tools
+# look them up by name
+from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.integrity import (  # noqa: F401
     fk_filter,
     fk_violations,
 )
+
 KNOWN_OPS = ("insert", "update", "delete", "replace")
 
 # physical layout: key-hash partition count of the fact target. Sized so
@@ -65,13 +78,18 @@ N_BUCKETS = 64
 PART_COL = "part_bucket"
 
 
+def bucket_expr(key: Column) -> Column:
+    """The partition bucket of a merge key — the ONE definition shared
+    by the write path (:func:`with_bucket`) and the batch probe's
+    touched-bucket sets. xxhash64 is stable across runs/sessions, so
+    re-delivered events land in the same partition — required for
+    idempotent merges."""
+    return F.pmod(F.xxhash64(key), F.lit(N_BUCKETS)).cast("int")
+
+
 def with_bucket(df: DataFrame, key_col: str = "id") -> DataFrame:
-    """Attach the deterministic partition bucket for ``key_col``.
-    xxhash64 is stable across runs/sessions, so re-delivered events land
-    in the same partition — required for idempotent merges."""
-    return df.withColumn(
-        PART_COL, F.pmod(F.xxhash64(F.col(key_col)), F.lit(N_BUCKETS)).cast("int")
-    )
+    """Attach the deterministic partition bucket for ``key_col``."""
+    return df.withColumn(PART_COL, bucket_expr(F.col(key_col)))
 
 
 def _has_parquet(path: str) -> bool:
@@ -93,35 +111,55 @@ def read_target(spark: SparkSession, path: str) -> DataFrame | None:
 def _merge_touched_partitions(
     spark: SparkSession,
     target_path: str,
-    newest: DataFrame,
+    newest: DataFrame | None,
     key_col: str = "id",
     touched: list[int] | None = None,
+    inserts: DataFrame | None = None,
 ) -> None:
-    """Partition-scoped MERGE: upsert ``newest`` into only the target
-    partitions whose bucket contains an updated key, then commit with
-    dynamic partition overwrite (untouched partitions' files are never
-    read or rewritten). ``touched`` (≤ N_BUCKETS small ints) may be
-    precomputed by the caller — e.g. folded into an already-running
-    probe aggregate — to skip the discovery job here."""
+    """Partition-scoped MERGE, landed as ONE commit: the stored rows
+    ``T`` of the buckets holding a changed key become ``upsert(T ∪
+    dedup_against_target(inserts, T), newest)`` — an update (``newest``,
+    one row per key) replaces or adds its key's row; an insert is added
+    once per key, and only if that key is neither stored nor updated.
+    The buckets are then rewritten with one dynamic partition overwrite
+    (untouched partitions' files are never read or rewritten).
+
+    ``touched`` (≤ N_BUCKETS small ints) may be precomputed by the
+    caller — e.g. folded into an already-running probe — to skip the
+    discovery job here; discovery covers ``newest`` only, so a call
+    with ``inserts`` must pass it. A missing store is an empty one."""
     from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.merge import (
         upsert,
     )
 
-    newest_b = with_bucket(newest, key_col)
-    if touched is None:
-        # ≤ N_BUCKETS small ints — a bounded metadata collect, not a
-        # data collect (the driver holds partition IDs, never rows)
-        touched = [r[0] for r in newest_b.select(PART_COL).distinct().collect()]
-    target_raw = spark.read.parquet(target_path)
-    target_touched = target_raw.filter(F.col(PART_COL).isin(touched)).drop(PART_COL)
-    merged = with_bucket(upsert(target_touched, newest, key_col), key_col)
+    if _has_parquet(target_path):
+        if touched is None:
+            if inserts is not None:
+                raise ValueError("a merge with inserts needs its touched buckets")
+            # ≤ N_BUCKETS small ints — a bounded metadata collect, not a
+            # data collect (the driver holds partition IDs, never rows)
+            touched = [
+                r[0]
+                for r in with_bucket(newest.select(key_col), key_col)
+                .select(PART_COL)
+                .distinct()
+                .collect()
+            ]
+        base = (
+            spark.read.parquet(target_path)
+            .filter(F.col(PART_COL).isin(touched))
+            .drop(PART_COL)
+        )
+    else:
+        base = (newest if newest is not None else inserts).limit(0)
+    if inserts is not None:
+        base = base.unionByName(dedup_against_target(inserts, base, key_col))
+    merged = upsert(base, newest, key_col) if newest is not None else base
     # one shuffle on the bucket column → ONE file per touched bucket
-    # per commit (r14): without it every upsert task writes into every
-    # touched bucket dir — tasks × buckets small files per batch that
-    # every LATER batch's target read must list and open again (the
-    # init path at windowed.py already does this; the merge path was
-    # the gap)
-    merged = merged.repartition(F.col(PART_COL))
+    # per commit: without it every task writes into every touched
+    # bucket dir — tasks × buckets small files per batch that every
+    # LATER batch's target read must list and open again
+    merged = with_bucket(merged, key_col).repartition(F.col(PART_COL))
     # localCheckpoint truncates lineage so the write no longer reads the
     # path it overwrites; it materializes only the touched partitions
     # (a lakehouse MERGE makes this a metadata-only commit instead)
@@ -150,6 +188,66 @@ def split_by_operation(batch: DataFrame) -> dict[str, DataFrame]:
     }
 
 
+def _pin(df: DataFrame, *aggs: Column) -> tuple[DataFrame, dict]:
+    """Eager ``localCheckpoint`` of ``df`` that also evaluates ``aggs``
+    over its rows — observed metrics ride the checkpoint job, so a
+    gate on the pinned rows costs no job of its own."""
+    seen = Observation()
+    pinned = df.observe(seen, *aggs).localCheckpoint(eager=True)
+    return pinned, seen.get
+
+
+def _tag_and_probe(batch: DataFrame, places_dim: DataFrame) -> tuple[DataFrame, dict]:
+    """Tag, pin and probe one CDC micro-batch in ONE job.
+
+    Tag: a left join to the distinct (domain-bounded, broadcast) dim
+    key set flags as ``__orphan`` every row whose FK has no dim match —
+    NULL fk included, ``fk_violations``' left-anti semantics — without
+    duplicating batch rows; every later FK decision is a filter on the
+    flag. Pin: every branch then reads the checkpoint — a foreachBatch
+    plan that references the batch N times re-scans the source N times
+    (and multiplies numInputRows N-fold, breaking the replay
+    batch-structure guard), the scd2_stream.py precedent. Probe: the
+    per-batch gates — unknown ops ``u``, insert / update FK orphans
+    ``io`` / ``po`` — and the merge's touched buckets, those of the
+    FK-valid insert keys ``ib`` and update keys ``tb``. Dedup, the PK
+    anti-join and the LWW collapse only drop rows or keep the key set,
+    so these cover every key the merge writes; ≤ N_BUCKETS small ints
+    each, bounded metadata."""
+    dim_keys = places_dim.select(F.col("place_id").alias("__dim_pid")).distinct()
+    tagged = (
+        batch.join(
+            F.broadcast(dim_keys),
+            F.col("full_document.place_id") == F.col("__dim_pid"),
+            "left",
+        )
+        .withColumn("__orphan", F.col("__dim_pid").isNull())
+        .drop("__dim_pid")
+    )
+    op = F.col("operation_type")
+    orphan = F.col("__orphan")
+    is_ins = op.isin("insert", "replace")
+    is_upd = op == "update"
+    # the bucket of the key the flattened row will carry (flatten casts
+    # _id to string), by the same expression the write path uses
+    key_bucket = bucket_expr(F.col("full_document._id").cast("string"))
+
+    def n(cond: Column) -> Column:
+        return F.coalesce(F.sum(cond.cast("long")), F.lit(0))
+
+    def buckets(cond: Column) -> Column:
+        return F.sort_array(F.collect_set(F.when(cond, key_bucket)))
+
+    return _pin(
+        tagged,
+        n(op.isNull() | ~op.isin(*KNOWN_OPS)).alias("u"),
+        n(is_ins & orphan).alias("io"),
+        n(is_upd & orphan).alias("po"),
+        buckets(is_ins & ~orphan).alias("ib"),
+        buckets(is_upd & ~orphan).alias("tb"),
+    )
+
+
 def apply_cdc_batch(
     batch: DataFrame,
     batch_id: int,
@@ -158,147 +256,81 @@ def apply_cdc_batch(
     dlq_path: str,
 ) -> None:
     """The foreachBatch body: idempotent CDC merge of one micro-batch
-    into the parquet fact target. Update events must carry the full
-    post-image in ``full_document`` (design choice per SURVEY.md §7
-    risk 3 — avoids the reference's per-event re-fetch RPC)."""
+    into the parquet fact target, landed as ONE commit. Update events
+    must carry the full post-image in ``full_document`` (design choice
+    per SURVEY.md §7 risk 3 — avoids the reference's per-event re-fetch
+    RPC)."""
     spark = batch.sparkSession
-    # pin the micro-batch ONCE: the merge references it through four
-    # op-type branches plus isEmpty probes, and a foreachBatch plan
-    # that references the batch N times re-scans the source N times
-    # (and multiplies numInputRows N-fold, breaking the replay
-    # batch-structure guard) — the scd2_stream.py precedent
-    batch = batch.localCheckpoint(eager=True)
+    batch, probe = _tag_and_probe(batch, places_dim)
     parts = split_by_operation(batch)
+    orphan = F.col("__orphan")
 
-    # ONE probe job for every per-batch gate: the former per-branch
-    # isEmpty() calls each launched their own Spark job over the batch
-    # (pure scheduling overhead at replay batch sizes — r13/r14
-    # optimization measurements). One aggregate over the pinned batch,
-    # broadcast-left-joined to the (domain-bounded) places dim's key
-    # set, answers the three branch gates AND the two FK-violation
-    # gates AND the update path's touched-bucket discovery:
-    #   - orphan flags replicate fk_violations' left_anti null
-    #     semantics exactly (no dim match — including NULL fk — means
-    #     violation); the dim key set is distinct-ed so the left join
-    #     cannot duplicate batch rows;
-    #   - `tb` collects the buckets of FK-VALID update keys (the LWW
-    #     collapse preserves the key set, so post-collapse buckets are
-    #     identical) — ≤ N_BUCKETS small ints, bounded metadata.
-    _unknown_cond = F.col("operation_type").isNull() | ~F.col(
-        "operation_type"
-    ).isin(*KNOWN_OPS)
-    _is_ins = F.col("operation_type").isin("insert", "replace")
-    _is_upd = F.col("operation_type") == "update"
-    _orphan = F.col("__dim_pid").isNull()
-    _dim_keys = places_dim.select(
-        F.col("place_id").alias("__dim_pid")
-    ).distinct()
-    _probe = (
-        batch.join(
-            F.broadcast(_dim_keys),
-            F.col("full_document.place_id") == F.col("__dim_pid"),
-            "left",
+    def dead_letter(df: DataFrame, sub: str) -> None:
+        df.withColumn("batch_id", F.lit(batch_id)).write.mode("append").json(
+            os.path.join(dlq_path, sub)
         )
-        .agg(
-            F.coalesce(F.sum(_unknown_cond.cast("long")), F.lit(0)).alias("u"),
-            F.coalesce(F.sum(_is_ins.cast("long")), F.lit(0)).alias("i"),
-            F.coalesce(F.sum(_is_upd.cast("long")), F.lit(0)).alias("p"),
-            F.coalesce(
-                F.sum((_is_ins & _orphan).cast("long")), F.lit(0)
-            ).alias("io"),
-            F.coalesce(
-                F.sum((_is_upd & _orphan).cast("long")), F.lit(0)
-            ).alias("po"),
-            F.sort_array(
-                F.collect_set(
-                    F.when(
-                        _is_upd & ~_orphan,
-                        F.pmod(
-                            F.xxhash64(F.col("full_document._id")),
-                            F.lit(N_BUCKETS),
-                        ).cast("int"),
-                    )
-                )
-            ).alias("tb"),
-        )
-        .first()
-    )
-    n_unknown, n_insert, n_update = _probe["u"], _probe["i"], _probe["p"]
-    n_ins_orphans, n_upd_orphans = _probe["io"], _probe["po"]
-    upd_touched = list(_probe["tb"])
+
+    def fk_rejects(docs: DataFrame) -> DataFrame:
+        # the orphan rows in fk_violations' column order (FK first)
+        rest = [c for c in docs.columns if c not in ("place_id", "__orphan")]
+        return docs.filter(orphan).select("place_id", *rest)
 
     # poison events → DLQ (instead of the reference's os._exit(1))
-    unknown = parts["unknown"]
-    if n_unknown:
-        unknown.withColumn("batch_id", F.lit(batch_id)).write.mode("append").json(
-            os.path.join(dlq_path, "unknown_ops")
-        )
+    if probe["u"]:
+        dead_letter(parts["unknown"].drop("__orphan"), "unknown_ops")
 
-    target = read_target(spark, target_path)
-
-    # ---- insert path: dedup → PK anti → FK semi (+DLQ) → flatten → append
-    ins_docs = parts["insert"].select("full_document.*")
-    if n_insert:
+    # ---- insert path: dedup → PK anti-join → FK orphans to the DLQ
+    ins_docs = parts["insert"].select("full_document.*", "__orphan")
+    if probe["io"]:
+        target = read_target(spark, target_path)
         if target is not None:
-            ins_docs = dedup_against_target(
+            deduped = dedup_against_target(
                 ins_docs, target.selectExpr("id as _id"), "_id"
             )
         else:
-            ins_docs = ins_docs.dropDuplicates(["_id"])
-        # post-dedup FK rejects are a SUBSET of the raw insert orphans
-        # the probe already counted (dedup only removes rows), so a
-        # zero raw count skips both the probe and the write; only a
-        # batch that actually carries insert orphans still pays the
-        # emptiness probe (dedup against the target can in principle
-        # absorb them, and an empty JSON append would corrupt the DLQ
-        # read-back)
-        if n_ins_orphans:
-            rejected = fk_violations(ins_docs, places_dim, "place_id")
-            if not rejected.isEmpty():
-                rejected.withColumn("batch_id", F.lit(batch_id)).write.mode(
-                    "append"
-                ).json(os.path.join(dlq_path, "fk_violations"))
-        valid = fk_filter(ins_docs, places_dim, "place_id")
-        flat = with_bucket(flatten_weather(valid))
-        flat.write.mode("append").partitionBy(PART_COL).parquet(target_path)
-        target = read_target(spark, target_path)
+            deduped = ins_docs.dropDuplicates(["_id"])
+        # rejects are taken AFTER dedup and the PK anti-join (an orphan
+        # re-insert of a stored key is ignored, not dead-lettered), so
+        # the probe's raw count is only an upper bound: pin them and
+        # count in the same job — an empty JSON append would corrupt
+        # the DLQ read-back
+        rejected, seen = _pin(fk_rejects(deduped), F.count(F.lit(1)).alias("n"))
+        if seen["n"]:
+            dead_letter(rejected, "fk_violations")
 
-    # ---- update path: LWW collapse → FK check → upsert merge → swap
-    upd_docs = parts["update"].select("ts", "full_document.*")
-    if n_update:
+    # ---- update path: FK orphans to the DLQ — pre-collapse rows, so
+    # the probe's count IS the emptiness decision
+    upd_docs = parts["update"].select("ts", "full_document.*", "__orphan")
+    if probe["po"]:
+        dead_letter(fk_rejects(upd_docs), "fk_violations")
+
+    # ---- one merge, one commit over the insert ∪ update buckets
+    touched = sorted(set(probe["ib"]) | set(probe["tb"]))
+    if touched:
         from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.merge import (
             last_write_wins,
         )
 
-        # FK rejects dead-letter here exactly as on the insert path —
-        # the same integrity failure must not vanish silently on
-        # update. The update path checks PRE-collapse rows, so the
-        # probe's orphan count IS the exact emptiness decision (no
-        # per-branch isEmpty job — r14 probe fold).
-        if n_upd_orphans:
-            upd_rejected = fk_violations(upd_docs, places_dim, "place_id")
-            upd_rejected.withColumn("batch_id", F.lit(batch_id)).write.mode(
-                "append"
-            ).json(os.path.join(dlq_path, "fk_violations"))
-        upd_docs = fk_filter(upd_docs, places_dim, "place_id")
-        # ts rides THROUGH the flatten projection (passthrough) — the
-        # earlier re-join by id cross-paired post-images with timestamps
-        # when one batch carried two updates for one key, making the
-        # LWW pick nondeterministic (regression-pinned in
-        # tests/test_round10.py)
-        flat_upd = flatten_weather(upd_docs, passthrough=["ts"])
-        newest = last_write_wins(flat_upd, "id", "ts").drop("ts")
-        if target is None:
-            with_bucket(newest).write.mode("overwrite").partitionBy(
-                PART_COL
-            ).parquet(target_path)
-        else:
-            # touched buckets were computed in the probe aggregate
-            # (FK-valid update keys; the LWW collapse preserves the
-            # key set) — skips the per-batch distinct().collect() job
-            _merge_touched_partitions(
-                spark, target_path, newest, "id", touched=upd_touched
+        inserts = newest = None
+        if probe["ib"]:
+            # dedup BEFORE the FK filter, as on the DLQ side: which
+            # duplicate survives must not depend on its FK validity
+            inserts = flatten_weather(
+                ins_docs.dropDuplicates(["_id"]).filter(~orphan).drop("__orphan")
             )
+        if probe["tb"]:
+            # ts rides THROUGH the flatten projection (passthrough) — a
+            # re-join by id cross-paired post-images with timestamps
+            # when one batch carried two updates for one key, making the
+            # LWW pick nondeterministic (regression-pinned in
+            # tests/test_round10.py)
+            flat_upd = flatten_weather(
+                upd_docs.filter(~orphan).drop("__orphan"), passthrough=["ts"]
+            )
+            newest = last_write_wins(flat_upd, "id", "ts").drop("ts")
+        _merge_touched_partitions(
+            spark, target_path, newest, "id", touched=touched, inserts=inserts
+        )
 
     # ---- delete path: intentionally a no-op (README.md:15)
 

@@ -50,18 +50,21 @@ def stage_phase_files(
     parent = os.path.dirname(input_dir)
     idx = list(range(start, start + len(phases)))
 
+    # checked on BOTH paths: a single-phase restart staging that let
+    # the column through would land a file whose schema differs from
+    # the earlier multi-phase files mid-replay
+    for ph in phases:
+        if "__phase" in ph.columns:
+            raise ValueError(
+                "phase schema must not contain a '__phase' column "
+                "(reserved by stage_phase_files)"
+            )
     if len(phases) == 1:
         # restart staging / single phase: the direct one-job write
         stage = tempfile.mkdtemp(prefix=f"phase{idx[0]}_", dir=parent)
         phases[0].coalesce(1).write.mode("overwrite").parquet(stage)
         src_dirs = {idx[0]: stage}
     else:
-        for ph in phases:
-            if "__phase" in ph.columns:
-                raise ValueError(
-                    "phase schema must not contain a '__phase' column "
-                    "(reserved by stage_phase_files)"
-                )
         tagged = None
         for i, ph in zip(idx, phases):
             t = ph.withColumn("__phase", F.lit(i))

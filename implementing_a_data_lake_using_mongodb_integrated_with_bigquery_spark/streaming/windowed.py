@@ -733,15 +733,8 @@ def _update_merge_run(
         # foreachBatch multi-reference class (scd2_stream/apply_cdc_batch
         # precedent, CLAUDE.md)
         keyed = keyed.localCheckpoint(eager=True)
-        if cdc_merge.read_target(sp, store) is None:
-            # one shuffle on the bucket column → one file per bucket
-            # (without it every task writes into every bucket dir:
-            # tasks × N_BUCKETS tiny files)
-            cdc_merge.with_bucket(keyed, "_merge_key").repartition(
-                F.col(cdc_merge.PART_COL)
-            ).write.mode("overwrite").partitionBy(cdc_merge.PART_COL).parquet(store)
-        else:
-            cdc_merge._merge_touched_partitions(sp, store, keyed, "_merge_key")
+        # the first batch merges into the missing (empty) store
+        cdc_merge._merge_touched_partitions(sp, store, keyed, "_merge_key")
 
     # state-partition sizing, same reasoning as session_windows_once:
     # per-partition state-store open/commit cost dominates over a small

@@ -77,6 +77,12 @@ def test_stage_phase_files_rejects_reserved_column(spark, tmp_path):
         stage_phase_files([ph, ph], str(tmp_path / "input"))
 
 
+def test_stage_phase_files_single_phase_rejects_reserved_column(spark, tmp_path):
+    ph = spark.createDataFrame([(1, 0)], "k int, __phase int")
+    with pytest.raises(ValueError, match="__phase"):
+        stage_phase_files([ph], str(tmp_path / "input"), start=1)
+
+
 def _doc(_id, place_id, temp_c=20.0):
     return {
         "_id": _id,

@@ -185,6 +185,144 @@ def test_partition_scoped_merge_leaves_untouched_partitions_alone(
     assert fact.count() == 8
 
 
+def _store_files(path):
+    """Relative path -> bytes of every file under the store."""
+    out = {}
+    for root, _dirs, files in os.walk(path):
+        for f in files:
+            p = os.path.join(root, f)
+            with open(p, "rb") as fh:
+                out[os.path.relpath(p, path)] = fh.read()
+    return out
+
+
+def _mixed_batch(b):
+    """Batch ``b``: 24 fresh inserts, a re-delivered insert, an FK-orphan
+    insert and updates to every sixth key of batch ``b - 1``."""
+    events = [
+        _event("insert", doc=_doc(f"b{b}k{i}", "hanoi", 20.0 + i))
+        for i in range(24)
+    ]
+    events.append(_event("insert", doc=_doc(f"b{b}k0", "hanoi", 20.0)))
+    events.append(_event("insert", doc=_doc(f"b{b}x", "nowhere", 1.0)))
+    if b > 0:
+        events += [
+            _event("update", doc=_doc(f"b{b - 1}k{i}", "hue", 90.0 + b), key=f"b{b - 1}k{i}",
+                   ts="2023-11-14T16:00:00.000Z")
+            for i in range(0, 24, 6)
+        ]
+    return events
+
+
+def test_probe_bucket_sets_match_write_path_buckets(spark, places_dim, tmp_path):
+    """The probe's touched-bucket sets decide which partitions the
+    dynamic overwrite replaces, so they must equal the buckets the
+    write path computes for the same rows — a bucket missing from the
+    set would drop its stored rows. Parity on a batch spanning many
+    buckets, FK orphans included."""
+    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.flatten import (
+        flatten_weather,
+    )
+    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.streaming.cdc_merge import (
+        _tag_and_probe,
+        with_bucket,
+    )
+
+    events = _mixed_batch(1) + [
+        _event("update", doc=_doc(f"u{i}", "nowhere", 5.0), key=f"u{i}") for i in range(3)
+    ]
+    events_dir = str(tmp_path / "events")
+    _write_events(events_dir, events)
+    batch = spark.read.schema(schemas.CDC_EVENT).json(events_dir)
+    _pinned, probe = _tag_and_probe(batch, places_dim)
+
+    def write_buckets(ops):
+        docs = (
+            batch.filter(F.col("operation_type").isin(*ops))
+            .select("full_document.*")
+            .join(places_dim.select("place_id"), "place_id", "left_semi")
+        )
+        rows = with_bucket(flatten_weather(docs)).select(PART_COL).distinct().collect()
+        return sorted(r[0] for r in rows)
+
+    assert probe["ib"] == write_buckets(["insert", "replace"])
+    assert probe["tb"] == write_buckets(["update"])
+    assert len(probe["ib"]) > 8 and len(probe["tb"]) > 1
+    assert (probe["io"], probe["po"], probe["u"]) == (1, 3, 0)
+
+
+def test_every_touched_bucket_holds_one_file(spark, places_dim, tmp_path):
+    """One commit per batch writes ONE file per touched bucket: after
+    several mixed insert+update batches no bucket directory has picked
+    up a second file (a separate insert append would leave one in every
+    bucket that got inserts but no update)."""
+    events_dir = str(tmp_path / "events")
+    target = str(tmp_path / "fact")
+    dlq = str(tmp_path / "dlq")
+    ckpt = str(tmp_path / "ckpt")
+    for b in range(3):
+        _write_events(events_dir, _mixed_batch(b), name=f"batch{b}.json")
+        _run(spark, events_dir, target, places_dim, dlq, ckpt)
+    per_bucket = {}
+    for root, _dirs, files in os.walk(target):
+        if os.path.basename(root).startswith(f"{PART_COL}="):
+            per_bucket[root] = sum(f.endswith(".parquet") for f in files)
+    assert len(per_bucket) > 16
+    assert set(per_bucket.values()) == {1}
+    fact = read_target(spark, target)
+    assert fact.count() == 72
+    assert fact.filter(F.col("temp_c") == 92.0).count() == 4
+
+
+def test_failed_commit_leaves_store_untouched(spark, places_dim, tmp_path, monkeypatch):
+    """A batch lands in one commit: when the target write fails before
+    its job commit, the store keeps every file byte for byte (no
+    half-applied batch), and a restart on the same checkpoint
+    converges to the clean run. A crash inside the commit's per-bucket
+    rename is not covered."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    def run_batches(root, fail_second=False):
+        events_dir = os.path.join(root, "events")
+        target = os.path.join(root, "fact")
+        dlq = os.path.join(root, "dlq")
+        ckpt = os.path.join(root, "ckpt")
+        _write_events(events_dir, _mixed_batch(0), name="batch0.json")
+        _run(spark, events_dir, target, places_dim, dlq, ckpt)
+        _write_events(events_dir, _mixed_batch(1), name="batch1.json")
+        if fail_second:
+            before = _store_files(target)
+            failed = []
+            set_mode, write_parquet = DataFrameWriter.mode, DataFrameWriter.parquet
+
+            def mode(self, save_mode):
+                self.save_mode = save_mode
+                return set_mode(self, save_mode)
+
+            def failing(self, path, *args, **kwargs):
+                # the merge commit: the overwrite of the target, once
+                merge_commit = getattr(self, "save_mode", None) == "overwrite"
+                if merge_commit and os.path.abspath(path) == os.path.abspath(target) and not failed:
+                    failed.append(path)
+                    raise RuntimeError("injected target write failure")
+                return write_parquet(self, path, *args, **kwargs)
+
+            monkeypatch.setattr(DataFrameWriter, "mode", mode)
+            monkeypatch.setattr(DataFrameWriter, "parquet", failing)
+            q = start_cdc_stream(spark, events_dir, target, places_dim, dlq, ckpt)
+            with pytest.raises(Exception, match="injected target write failure"):
+                q.awaitTermination(120)
+            monkeypatch.undo()
+            assert failed
+            assert _store_files(target) == before
+        _run(spark, events_dir, target, places_dim, dlq, ckpt)
+        return sorted(map(tuple, read_target(spark, target).collect()))
+
+    restarted = run_batches(str(tmp_path / "restarted"), fail_second=True)
+    clean = run_batches(str(tmp_path / "clean"))
+    assert restarted == clean and len(clean) == 48
+
+
 def test_windowed_counts_streaming(spark, tmp_path):
     events_dir = str(tmp_path / "ev")
     os.makedirs(events_dir)

@@ -60,7 +60,7 @@ def main() -> None:
         names = [
             k
             for k, v in sorted(
-                ((k, v) for k, v in detail.items() if isinstance(v, float)),
+                ((k, v) for k, v in detail.items() if isinstance(v, (int, float))),
                 key=lambda kv: -kv[1],
             )
         ][:n]
