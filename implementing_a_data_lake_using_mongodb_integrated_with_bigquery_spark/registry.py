@@ -66,6 +66,9 @@ from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.plans
     star_revenue,
 )
 from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.sources import load_table, parallelize
+from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.streaming.phasing import (
+    scoped_conf,
+)
 
 
 def _scaled_sum(col: F.Column, scale: int, alias: str) -> F.Column:
@@ -8119,10 +8122,7 @@ def q_bloom_filtered_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "applicationSideScanSizeThreshold": "0",
         "spark.sql.autoBroadcastJoinThreshold": "-1",
     }
-    prev = {k: spark.conf.get(k) for k in confs}
-    try:
-        for k, v in confs.items():
-            spark.conf.set(k, v)
+    with scoped_conf(spark, confs):
         l = load_table(spark, sf_dir, "lineitem")
         o = load_table(spark, sf_dir, "orders").filter(
             (F.col("o_orderpriority") == "1-URGENT")
@@ -8142,9 +8142,6 @@ def q_bloom_filtered_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        for k, v in prev.items():
-            spark.conf.set(k, v)
 
 
 ORACLE_BLOOM_JOIN = """
@@ -12545,12 +12542,10 @@ def q_statestore_introspection(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = tempfile.mkdtemp(prefix="statestore_q_")
     inp = os.path.join(root, "in")
     ckpt = os.path.join(root, "ck")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         e.write.parquet(inp)
         schema = spark.read.parquet(inp).schema
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try:
+        with scoped_conf(spark, {"spark.sql.shuffle.partitions": "8"}):
             q = (
                 spark.readStream.schema(schema)
                 .parquet(inp)
@@ -12563,8 +12558,6 @@ def q_statestore_introspection(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .start()
             )
             q.awaitTermination()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
         state = spark.read.format("statestore").load(ckpt)
         # the value struct carries the aggregation BUFFER's internal
         # field name ("count"), not the query's output alias
@@ -15610,23 +15603,16 @@ def q_stream_restart_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     (eviction points left_ts+horizon / right_ts make an evicted
     partner's matches inadmissible anyway, so eviction is subsumed).
     Aggregated per user into match counts + attributed value."""
-    import os as _os
-
     from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.streaming.joins import (
         restart_attribution_join,
     )
 
     e = load_table(spark, sf_dir, "events")
-    out, stats = restart_attribution_join(
+    out, _stats = restart_attribution_join(
         spark,
         phase1=e.filter(F.col("event_id") % 2 == 0),
         phase2=e.filter(F.col("event_id") % 2 != 0),
     )
-    for tag in ("phase1", "phase2"):
-        if stats[tag]["data_batches"] != 1:
-            raise RuntimeError(
-                f"restart replay lost batch isolation: {stats}"
-            )
     return (
         out.groupBy("k")
         .agg(
@@ -16007,16 +15993,13 @@ def q_stream_restart_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     e = load_table(spark, sf_dir, "events")
-    out, stats = restart_session_windows(
+    out, _stats = restart_session_windows(
         spark,
         phase1=e.filter(F.col("event_id") % 2 == 0),
         phase2=e.filter(F.col("event_id") % 2 != 0),
         gap="30 minutes",
         lateness="1 hour",
     )
-    for tag in ("phase1", "phase2"):
-        if stats[tag]["data_batches"] != 1:
-            raise RuntimeError(f"restart replay lost batch isolation: {stats}")
     return out.select(
         "user_id",
         epoch_us("session_start").alias("session_start_us"),
@@ -16111,16 +16094,13 @@ def q_stream_restart_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     e = load_table(spark, sf_dir, "events")
-    out, stats = restart_stream_dedup(
+    out, _stats = restart_stream_dedup(
         spark,
         phase1=e.filter(F.col("event_id") % 2 == 0),
         phase2=e,
         key_cols=["event_id", "event_type"],
         delay="1 hour",
     )
-    for tag in ("phase1", "phase2"):
-        if stats[tag]["data_batches"] != 1:
-            raise RuntimeError(f"restart replay lost batch isolation: {stats}")
     return out.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("long").alias("n_emitted"),
         F.countDistinct("event_id").cast("long").alias("n_distinct"),
@@ -16646,9 +16626,7 @@ def q_python_datasource_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-partition store open/commit dominates at this keyspace.
     # 8 partitions carry the same 30 keys; restored after the bounded
     # run. Values unchanged (hash partitioning only moves keys).
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": "8"}):
         q = (
             agg.writeStream.format("memory")
             .queryName(sink)
@@ -16660,8 +16638,6 @@ def q_python_datasource_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             progress = list(q.recentProgress)
         finally:
             q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     data_batches = sum(1 for p in progress if p["numInputRows"] > 0)
     if data_batches != 6:
         raise RuntimeError(
@@ -16835,13 +16811,9 @@ def q_stream_rocksdb_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
         restart_append_counts,
     )
 
-    key = "spark.sql.streaming.stateStore.providerClass"
-    try:
-        prev = spark.conf.get(key)
-    except Exception:
-        prev = None
-    spark.conf.set(key, ROCKSDB_PROVIDER)
-    try:
+    with scoped_conf(
+        spark, {"spark.sql.streaming.stateStore.providerClass": ROCKSDB_PROVIDER}
+    ):
         e = load_table(spark, sf_dir, "events")
         out, stats = restart_append_counts(
             spark,
@@ -16852,11 +16824,6 @@ def q_stream_rocksdb_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
             group_cols=["event_type"],
             aggs=[F.count(F.lit(1)).cast("long").alias("n_events")],
         )
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
     for tag in ("phase1", "phase2"):
         if not stats[tag]["rocksdb"]:
             raise RuntimeError(

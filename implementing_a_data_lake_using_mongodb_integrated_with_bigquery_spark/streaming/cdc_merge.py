@@ -367,62 +367,7 @@ def cdc_merge_replay(
     phase→batch mapping is guarded both by row counts
     (``check_batch_structure``) and by file paths
     (``check_admission_log``)."""
-    import shutil
-    import tempfile
-
-    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.schemas import (
-        CDC_EVENT,
-    )
-    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.streaming.phasing import (
-        check_admission_log,
-        check_batch_structure,
-        stage_phase_files,
-    )
-
-    root = tempfile.mkdtemp(prefix="cdc_replay_")
-    input_dir = os.path.join(root, "input")
-    target = os.path.join(root, "fact")
-    dlq = os.path.join(root, "dlq")
-    ckpt = os.path.join(root, "ckpt")
-    try:
-        counts = stage_phase_files(phases, input_dir)
-        stream = (
-            spark.readStream.schema(CDC_EVENT)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(input_dir)
-        )
-        q = (
-            stream.writeStream.foreachBatch(
-                cdc_foreach_batch(target, places_dim, dlq)
-            )
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        check_batch_structure(list(q.recentProgress), counts, "cdc_merge_replay")
-        check_admission_log(ckpt, len(phases), "cdc_merge_replay")
-
-        fact = read_target(spark, target)
-        fact = fact.localCheckpoint(eager=True) if fact is not None else None
-
-        def _read_dlq(sub: str, schema: str) -> DataFrame:
-            path = os.path.join(dlq, sub)
-            if _has_json(path):
-                return spark.read.json(path).localCheckpoint(eager=True)
-            return spark.createDataFrame([], schema)
-
-        dlq_fk = _read_dlq(
-            "fk_violations",
-            "_id string, place_id string, "
-            "current struct<temp_c: double>, batch_id long",
-        )
-        dlq_unknown = _read_dlq(
-            "unknown_ops", "operation_type string, batch_id long"
-        )
-        return fact, dlq_fk, dlq_unknown
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    return _replay(spark, [phases], places_dim, "cdc_merge_replay")
 
 
 def cdc_merge_restart(
@@ -443,50 +388,46 @@ def cdc_merge_restart(
     idempotent by design, reference T3). Admission is path-guarded
     per run and across the restart. Returns (fact, dlq_fk,
     dlq_unknown) like :func:`cdc_merge_replay`."""
-    import shutil
+    return _replay(spark, [[phase1], [phase2]], places_dim, "cdc_merge_restart")
+
+
+def _replay(
+    spark: SparkSession,
+    runs: list[list[DataFrame]],
+    places_dim: DataFrame,
+    name: str,
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """Shared body of the two CDC replays: each entry of ``runs`` is
+    one ``availableNow`` query over one checkpoint (its phases staged
+    after the previous run committed), so ``[[p1, p2, p3]]`` is a
+    phased replay and ``[[p1], [p2]]`` a checkpoint restart. Reads
+    back (fact, dlq_fk, dlq_unknown), pinned off the temp root."""
     import tempfile
 
-    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.schemas import (
-        CDC_EVENT,
-    )
     from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.streaming.phasing import (
         check_admission_log,
         check_batch_structure,
+        foreach_phase,
         stage_phase_files,
     )
 
-    root = tempfile.mkdtemp(prefix="cdc_restart_")
-    input_dir = os.path.join(root, "input")
-    target = os.path.join(root, "fact")
-    dlq = os.path.join(root, "dlq")
-    ckpt = os.path.join(root, "ckpt")
-
-    def run_once() -> list:
-        stream = (
-            spark.readStream.schema(CDC_EVENT)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(input_dir)
-        )
-        q = (
-            stream.writeStream.foreachBatch(
-                cdc_foreach_batch(target, places_dim, dlq)
+    with tempfile.TemporaryDirectory(
+        prefix=f"{name}_", ignore_cleanup_errors=True
+    ) as root:
+        target = os.path.join(root, "fact")
+        dlq = os.path.join(root, "dlq")
+        body = cdc_foreach_batch(target, places_dim, dlq)
+        staged = 0
+        for i, phases in enumerate(runs, 1):
+            counts = stage_phase_files(
+                phases, os.path.join(root, "input"), start=staged
             )
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return list(q.recentProgress)
-
-    try:
-        c1 = stage_phase_files([phase1], input_dir)
-        prog1 = run_once()
-        check_batch_structure(prog1, c1, "cdc_merge_restart run 1")
-        # the restart: phase 2 lands AFTER run 1 committed its offsets
-        c2 = stage_phase_files([phase2], input_dir, start=1)
-        prog2 = run_once()
-        check_batch_structure(prog2, c2, "cdc_merge_restart run 2")
-        check_admission_log(ckpt, 2, "cdc_merge_restart")
+            staged += len(phases)
+            where = name if len(runs) == 1 else f"{name} run {i}"
+            check_batch_structure(
+                foreach_phase(spark, root, body, name), counts, where
+            )
+        check_admission_log(os.path.join(root, "ckpt"), staged, name)
 
         fact = read_target(spark, target)
         fact = fact.localCheckpoint(eager=True) if fact is not None else None
@@ -506,8 +447,6 @@ def cdc_merge_restart(
             "unknown_ops", "operation_type string, batch_id long"
         )
         return fact, dlq_fk, dlq_unknown
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 def _has_json(path: str) -> bool:

@@ -20,6 +20,10 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.streaming.phasing import (
+    scoped_conf,
+)
+
 _SINK_SEQ = itertools.count()
 
 
@@ -50,9 +54,6 @@ def stream_dedup_once(
     shuffle setting is restored after the run (see
     ``streaming/joins.py`` for the same discipline).
     """
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "true")
@@ -80,7 +81,7 @@ def stream_dedup_once(
     aggs = aggs or [F.count(F.lit(1)).alias("n_events")]
     out = deduped.groupBy(*group_cols).agg(*aggs) if (group_cols or aggs) else deduped
     sink = f"stream_dedup_once_{next(_SINK_SEQ)}"
-    try:
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": state_partitions}):
         q = (
             out.writeStream.format("memory")
             .queryName(sink)
@@ -89,6 +90,4 @@ def stream_dedup_once(
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return spark.table(sink)

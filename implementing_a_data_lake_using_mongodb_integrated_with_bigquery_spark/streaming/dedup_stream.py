@@ -24,9 +24,7 @@ operator (they are the ordinary ``minhash_banded_pairs`` run).
 
 from __future__ import annotations
 
-import itertools
 import os
-import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
@@ -42,10 +40,9 @@ from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.sourc
 from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.streaming.phasing import (
     check_admission_log,
     check_batch_structure,
+    foreach_phase,
     stage_phase_files,
 )
-
-_SEQ = itertools.count()
 
 
 def incremental_dedup_stream(
@@ -75,13 +72,12 @@ def incremental_dedup_stream(
     Same r=2/b=16 recall-≈1 banding argument as the batch operator, so
     the exact-Jaccard sequential SQL twin is the oracle. Returns
     (result, stats); stats carries the per-batch structure guard."""
-    root = tempfile.mkdtemp(prefix="stream_dedup_")
-    bands_dir = os.path.join(root, "bands")
-    sh_dir = os.path.join(root, "shingles")
-    results_dir = os.path.join(root, "results")
-    input_dir = os.path.join(root, "input")
-
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="stream_dedup_", ignore_cleanup_errors=True
+    ) as root:
+        bands_dir = os.path.join(root, "bands")
+        sh_dir = os.path.join(root, "shingles")
+        results_dir = os.path.join(root, "results")
         # corpus index persisted ONCE: shingle table + band rows
         ex = _shingle_table(corpus, id_col, text_col, n)
         ex.write.parquet(sh_dir)
@@ -89,9 +85,8 @@ def incremental_dedup_stream(
         ex.unpersist()
 
         phase_counts = stage_phase_files(
-            [p.select(id_col, text_col) for p in phases], input_dir
+            [p.select(id_col, text_col) for p in phases], os.path.join(root, "input")
         )
-        schema = spark.read.parquet(input_dir).schema
 
         def screen(batch_df: DataFrame, _batch_id: int) -> None:
             sp = batch_df.sparkSession
@@ -163,20 +158,8 @@ def incremental_dedup_stream(
             )
             inc.unpersist()
 
-        q = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(input_dir)
-            .writeStream.foreachBatch(screen)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .queryName(f"incremental_dedup_stream_{next(_SEQ)}")
-            .start()
-        )
-        q.awaitTermination()
-        data = check_batch_structure(
-            list(q.recentProgress), phase_counts, "incremental_dedup_stream"
-        )
+        progress = foreach_phase(spark, root, screen, "incremental_dedup_stream")
+        data = check_batch_structure(progress, phase_counts, "incremental_dedup_stream")
         # path-exact phase→batch guard (counts can collide across
         # equal-sized phases; the checkpoint's source log cannot)
         check_admission_log(
@@ -208,8 +191,6 @@ def incremental_dedup_stream(
                 f"{id_col} {id_t}, is_novel boolean, dup_of {id_t}, "
                 "jaccard double",
             )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
     stats = {
         "data_batches": len(data),
         "rows_per_batch": [p["numInputRows"] for p in data],

@@ -21,9 +21,7 @@ written once before the stream starts.
 
 from __future__ import annotations
 
-import itertools
 import os
-import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
@@ -32,10 +30,10 @@ from pyspark.sql import functions as F
 from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.streaming.phasing import (
     check_admission_log,
     check_batch_structure,
+    foreach_phase,
+    scoped_conf,
     stage_phase_files,
 )
-
-_SEQ = itertools.count()
 
 
 def _bin_col(value_col: str, n_bins: int, lo: float, hi: float):
@@ -63,16 +61,14 @@ def psi_stream_phased(
     fixed equal-width bins. Returns ((batch_id, n_batch, psi) rows,
     stats). Zero-mass bins on either side are skipped (standard PSI);
     the scaled-BIGINT term sum keeps the metric hash-stable."""
-    root = tempfile.mkdtemp(prefix="psi_stream_")
-    input_dir = os.path.join(root, "input")
-    ref_dir = os.path.join(root, "ref")
-    out_dir = os.path.join(root, "out")
-    ckpt = os.path.join(root, "ckpt")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="psi_stream_", ignore_cleanup_errors=True
+    ) as root:
+        ref_dir = os.path.join(root, "ref")
+        out_dir = os.path.join(root, "out")
         phase_counts = stage_phase_files(
-            [p.select(value_col) for p in phases], input_dir
+            [p.select(value_col) for p in phases], os.path.join(root, "input")
         )
-        schema = spark.read.parquet(input_dir).schema
         (
             reference.groupBy(
                 _bin_col(value_col, n_bins, lo, hi).alias("bin")
@@ -109,32 +105,15 @@ def psi_stream_phased(
             )
             row.coalesce(1).write.mode("append").parquet(out_dir)
 
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        if shuffle_partitions is not None:
-            spark.conf.set(
-                "spark.sql.shuffle.partitions", str(shuffle_partitions)
-            )
-        try:
-            q = (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", "1")
-                .parquet(input_dir)
-                .writeStream.foreachBatch(apply_batch)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .queryName(f"psi_stream_{next(_SEQ)}")
-                .start()
-            )
-            q.awaitTermination()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        data = check_batch_structure(
-            list(q.recentProgress), phase_counts, "psi_stream_phased"
+        with scoped_conf(
+            spark, {"spark.sql.shuffle.partitions": shuffle_partitions}
+        ):
+            progress = foreach_phase(spark, root, apply_batch, "psi_stream")
+        data = check_batch_structure(progress, phase_counts, "psi_stream_phased")
+        check_admission_log(
+            os.path.join(root, "ckpt"), len(phase_counts), "psi_stream_phased"
         )
-        check_admission_log(ckpt, len(phase_counts), "psi_stream_phased")
         result = spark.read.parquet(out_dir).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
     stats = {
         "data_batches": len(data),
         "rows_per_batch": [p["numInputRows"] for p in data],

@@ -19,9 +19,7 @@ discipline as the other bounded replays (`streaming.phasing`).
 
 from __future__ import annotations
 
-import itertools
 import os
-import shutil
 import tempfile
 from collections.abc import Callable
 
@@ -31,10 +29,10 @@ from pyspark.sql import functions as F
 from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.streaming.phasing import (
     check_admission_log,
     check_batch_structure,
+    foreach_phase,
+    scoped_conf,
     stage_phase_files,
 )
-
-_SEQ = itertools.count()
 
 
 def evolving_dim_enrich_phased(
@@ -51,13 +49,11 @@ def evolving_dim_enrich_phased(
     effect at that batch), aggregated by ``group_cols`` +
     ``agg_cols()``, stamped with ``batch_id`` and appended to the
     output store. Returns (output DataFrame, stats)."""
-    root = tempfile.mkdtemp(prefix="enrich_stream_")
-    input_dir = os.path.join(root, "input")
-    out_dir = os.path.join(root, "out")
-    ckpt = os.path.join(root, "ckpt")
-    try:
-        phase_counts = stage_phase_files(phases, input_dir)
-        schema = spark.read.parquet(input_dir).schema
+    with tempfile.TemporaryDirectory(
+        prefix="enrich_stream_", ignore_cleanup_errors=True
+    ) as root:
+        out_dir = os.path.join(root, "out")
+        phase_counts = stage_phase_files(phases, os.path.join(root, "input"))
         os.makedirs(out_dir, exist_ok=True)
 
         def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -73,29 +69,14 @@ def evolving_dim_enrich_phased(
             # read-and-overwrite of earlier batches' output
             enriched.write.parquet(os.path.join(out_dir, f"batch={batch_id}"))
 
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        if shuffle_partitions is not None:
-            spark.conf.set(
-                "spark.sql.shuffle.partitions", str(shuffle_partitions)
-            )
-        try:
-            q = (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", "1")
-                .parquet(input_dir)
-                .writeStream.foreachBatch(apply_batch)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .queryName(f"enrich_stream_{next(_SEQ)}")
-                .start()
-            )
-            q.awaitTermination()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        data = check_batch_structure(
-            list(q.recentProgress), phase_counts, "evolving_dim_enrich"
+        with scoped_conf(
+            spark, {"spark.sql.shuffle.partitions": shuffle_partitions}
+        ):
+            progress = foreach_phase(spark, root, apply_batch, "enrich_stream")
+        data = check_batch_structure(progress, phase_counts, "evolving_dim_enrich")
+        check_admission_log(
+            os.path.join(root, "ckpt"), len(phase_counts), "evolving_dim_enrich"
         )
-        check_admission_log(ckpt, len(phase_counts), "evolving_dim_enrich")
         parts = [
             spark.read.parquet(os.path.join(out_dir, d))
             for d in sorted(os.listdir(out_dir))
@@ -104,8 +85,6 @@ def evolving_dim_enrich_phased(
         for p in parts[1:]:
             result = result.unionByName(p)
         result = result.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
     stats = {
         "data_batches": len(data),
         "rows_per_batch": [p["numInputRows"] for p in data],

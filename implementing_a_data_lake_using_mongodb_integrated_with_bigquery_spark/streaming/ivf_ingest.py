@@ -17,9 +17,7 @@ cell id bit-for-bit from the same inlined literals.
 
 from __future__ import annotations
 
-import itertools
 import os
-import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
@@ -34,10 +32,9 @@ from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.sourc
 from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.streaming.phasing import (
     check_admission_log,
     check_batch_structure,
+    foreach_phase,
     stage_phase_files,
 )
-
-_SEQ = itertools.count()
 
 
 def ivf_ingest_phased(
@@ -60,15 +57,13 @@ def ivf_ingest_phased(
     (assignment is a literal-argmin expression; the append never
     shuffles); the final audit is one hash aggregate over the store.
     """
-    root = tempfile.mkdtemp(prefix="ivf_ingest_")
-    input_dir = os.path.join(root, "input")
-    store = os.path.join(root, "store")
-    ckpt = os.path.join(root, "ckpt")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="ivf_ingest_", ignore_cleanup_errors=True
+    ) as root:
+        store = os.path.join(root, "store")
         phase_counts = stage_phase_files(
-            [p.select(id_col, vec_col) for p in phases], input_dir
+            [p.select(id_col, vec_col) for p in phases], os.path.join(root, "input")
         )
-        schema = spark.read.parquet(input_dir).schema
 
         def ingest(batch_df: DataFrame, _batch_id: int) -> None:
             batch_df.select(
@@ -78,21 +73,11 @@ def ivf_ingest_phased(
                 ).alias("cell"),
             ).write.mode("append").parquet(store)
 
-        q = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(input_dir)
-            .writeStream.foreachBatch(ingest)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .queryName(f"ivf_ingest_{next(_SEQ)}")
-            .start()
+        progress = foreach_phase(spark, root, ingest, "ivf_ingest")
+        data = check_batch_structure(progress, phase_counts, "ivf_ingest_phased")
+        check_admission_log(
+            os.path.join(root, "ckpt"), len(phase_counts), "ivf_ingest_phased"
         )
-        q.awaitTermination()
-        data = check_batch_structure(
-            list(q.recentProgress), phase_counts, "ivf_ingest_phased"
-        )
-        check_admission_log(ckpt, len(phase_counts), "ivf_ingest_phased")
         # the ingest appended one file-set per micro-batch — the store
         # accretes small files forever. Compact cell-clustered under
         # the footer-count invariant BEFORE the audit reads it (the ops
@@ -109,8 +94,6 @@ def ivf_ingest_phased(
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
     stats = {
         "data_batches": len(data),
         "rows_per_batch": [p["numInputRows"] for p in data],

@@ -12,10 +12,18 @@ from __future__ import annotations
 
 import itertools
 import os
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.streaming.phasing import (
+    check_admission_log,
+    check_batch_structure,
+    scoped_conf,
+    stage_phase_files,
+)
 
 _SINK_SEQ = itertools.count()
 
@@ -102,15 +110,12 @@ def _attribution_once(
     how: str,
     sink_tag: str,
 ) -> DataFrame:
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
     left, right = _watermarked_pair(
         spark, events_path, key_col, left_type, right_type, lateness
     )
     joined = _interval_join(left, right, horizon, how)
     sink = f"{sink_tag}_{next(_SINK_SEQ)}"
-    try:
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": state_partitions}):
         q = (
             joined.select(
                 "k", "left_id", "right_id", "left_ts", "right_ts", "right_value"
@@ -122,8 +127,6 @@ def _attribution_once(
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return spark.table(sink)
 
 
@@ -271,9 +274,6 @@ def chained_join_window_once(
     time − lateness) — pinned empirically with 15-minute windows
     against a dense synthetic stream (the hour-coarse real replay
     cannot discriminate W from W − horizon)."""
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
     left, right = _watermarked_pair(
         spark, events_path, key_col, left_type, right_type, lateness
     )
@@ -283,7 +283,7 @@ def chained_join_window_once(
         F.sum(F.round(F.col("right_value") * 10000).cast("long")).alias("_sv"),
     )
     sink = f"chained_join_window_once_{next(_SINK_SEQ)}"
-    try:
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": state_partitions}):
         q = (
             aggd.select(
                 F.col("w.start").alias("window_start"),
@@ -297,8 +297,6 @@ def chained_join_window_once(
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return spark.table(sink)
 
 
@@ -339,15 +337,12 @@ def attribution_full_outer_join_once(
     null on left-only rows) so callers can group on
     ``coalesce(k, k2)``.
     """
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
     left, right = _watermarked_pair(
         spark, events_path, key_col, left_type, right_type, lateness
     )
     joined = _interval_join(left, right, horizon, "full_outer")
     sink = f"attribution_full_outer_{next(_SINK_SEQ)}"
-    try:
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": state_partitions}):
         q = (
             joined.select(
                 "k", "k2", "left_id", "right_id", "left_ts", "right_ts",
@@ -360,8 +355,6 @@ def attribution_full_outer_join_once(
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return spark.table(sink)
 
 
@@ -394,52 +387,46 @@ def restart_attribution_join(
     right_ts < W1) and against each other. The union of both runs'
     emissions is returned with a stats dict of per-run progress facts.
     """
-    import os as _os
-    import shutil
-    import tempfile
+    with tempfile.TemporaryDirectory(
+        prefix="restart_join_", ignore_cleanup_errors=True
+    ) as root, scoped_conf(
+        spark, {"spark.sql.shuffle.partitions": state_partitions}
+    ):
+        input_dir = os.path.join(root, "input")
+        ckpt = os.path.join(root, "ckpt")
+        out_dir = os.path.join(root, "out")
 
-    root = tempfile.mkdtemp(prefix="restart_join_")
-    input_dir = _os.path.join(root, "input")
-    ckpt = _os.path.join(root, "ckpt")
-    out_dir = _os.path.join(root, "out")
-    stage2 = _os.path.join(root, "p2stage")
-    phase1.coalesce(1).write.parquet(input_dir)
+        def run_phase() -> list:
+            left, right = _watermarked_pair(
+                spark, input_dir + "/", key_col, left_type, right_type, lateness
+            )
+            joined = _interval_join(left, right, horizon, "inner").select(
+                "k", "left_id", "right_id", "left_ts", "right_ts", "right_value"
+            )
+            q = (
+                joined.writeStream.format("parquet")
+                .option("path", out_dir)
+                .option("checkpointLocation", ckpt)
+                .outputMode("append")
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
+            return list(q.recentProgress)
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-
-    def run_phase() -> list:
-        left, right = _watermarked_pair(
-            spark, input_dir + "/", key_col, left_type, right_type, lateness
-        )
-        joined = _interval_join(left, right, horizon, "inner").select(
-            "k", "left_id", "right_id", "left_ts", "right_ts", "right_value"
-        )
-        q = (
-            joined.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return list(q.recentProgress)
-
-    try:
-        prog1 = run_phase()
-        phase2.coalesce(1).write.parquet(stage2)
-        for f in _os.listdir(stage2):
-            if f.endswith(".parquet"):
-                _os.link(
-                    _os.path.join(stage2, f), _os.path.join(input_dir, f"p2-{f}")
-                )
-        prog2 = run_phase()
+        progress = []
+        for i, phase in enumerate((phase1, phase2)):
+            counts = stage_phase_files([phase], input_dir, start=i)
+            progress.append(run_phase())
+            # both join sides stream the same file, so a batch's
+            # numInputRows counts every phase row twice
+            check_batch_structure(
+                progress[i], [2 * n for n in counts],
+                f"restart_attribution_join run {i + 1}",
+            )
+        prog1, prog2 = progress
+        check_admission_log(ckpt, 2, "restart_attribution_join")
         result = spark.read.parquet(out_dir).localCheckpoint(eager=True)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        shutil.rmtree(root, ignore_errors=True)
 
     def facts(progress: list) -> dict:
         data = [p for p in progress if p["numInputRows"] > 0]
@@ -477,15 +464,12 @@ def attribution_semi_join_once(
     emits, i.e. exactly the batch EXISTS semantics the oracle runs.
     Output carries only left columns, the semi contract.
     """
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
     left, right = _watermarked_pair(
         spark, events_path, key_col, left_type, right_type, lateness
     )
     joined = _interval_join(left, right, horizon, "left_semi")
     sink = f"attribution_semi_{next(_SINK_SEQ)}"
-    try:
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": state_partitions}):
         q = (
             joined.select("k", "left_id", "left_ts")
             .writeStream.format("memory")
@@ -495,6 +479,4 @@ def attribution_semi_join_once(
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return spark.table(sink)

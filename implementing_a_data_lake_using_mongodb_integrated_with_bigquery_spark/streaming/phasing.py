@@ -4,15 +4,78 @@ A bounded streaming query is only oracle-able if the micro-batch
 structure is a pure function of the data: each logical phase lands as
 exactly ONE parquet file with strictly increasing mtimes, so the file
 source's oldest-first ordering replays phase i as micro-batch i under
-``maxFilesPerTrigger=1``. Shared by ``windowed.update_merge_phased``
-and ``dedup_stream.incremental_dedup_stream``.
+``maxFilesPerTrigger=1``. Shared by every phased replay and
+checkpoint-restart harness in ``streaming/``.
+
+A ``foreachBatch`` replay is: a ``tempfile.TemporaryDirectory`` root,
+``stage_phase_files`` into ``root/input``, ``foreach_phase`` (one
+``availableNow`` query, checkpoint at ``root/ckpt``), then both guards
+(``check_batch_structure`` and ``check_admission_log``). Session conf
+a bounded run needs (shuffle/state partitions, state-store provider)
+is set with ``scoped_conf``, which restores it on any exit.
 """
 
 from __future__ import annotations
 
+import contextlib
+import itertools
 import os
+from collections.abc import Callable, Iterator
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
+
+_SEQ = itertools.count()
+
+
+@contextlib.contextmanager
+def scoped_conf(
+    spark: SparkSession, conf: dict[str, str | int | None]
+) -> Iterator[None]:
+    """Set each key of ``conf`` for the ``with`` body and restore it on
+    exit, normal or exceptional. A ``None`` value leaves that key
+    untouched (callers pass an optional partition count straight
+    through); a key that was unset before is unset again."""
+    prev: dict[str, str | None] = {}
+    try:
+        for key, value in conf.items():
+            if value is None:
+                continue
+            prev[key] = spark.conf.get(key, None)
+            spark.conf.set(key, str(value))
+        yield
+    finally:
+        for key, value in prev.items():
+            if value is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, value)
+
+
+def foreach_phase(
+    spark: SparkSession,
+    root: str,
+    body: Callable[[DataFrame, int], None],
+    name: str,
+) -> list[dict]:
+    """Run ``body`` as the ``foreachBatch`` sink of ONE ``availableNow``
+    query over the phase files staged in ``root/input`` (schema read
+    from the staged files, ``maxFilesPerTrigger=1`` so phase i is
+    micro-batch i), checkpointed at ``root/ckpt``. A second call on the
+    same root resumes from that checkpoint (restart replays). Returns
+    the query's ``recentProgress`` for the caller's guards."""
+    input_dir = os.path.join(root, "input")
+    q = (
+        spark.readStream.schema(spark.read.parquet(input_dir).schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(input_dir)
+        .writeStream.foreachBatch(body)
+        .option("checkpointLocation", os.path.join(root, "ckpt"))
+        .trigger(availableNow=True)
+        .queryName(f"{name}_{next(_SEQ)}")
+        .start()
+    )
+    q.awaitTermination()
+    return list(q.recentProgress)
 
 
 def stage_phase_files(

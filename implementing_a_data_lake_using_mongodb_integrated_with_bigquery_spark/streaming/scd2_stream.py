@@ -19,7 +19,6 @@ The parity test pins it; the oracle is the batch SQL.
 
 from __future__ import annotations
 
-import itertools
 import os
 import shutil
 import tempfile
@@ -36,10 +35,10 @@ from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.sourc
 from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.streaming.phasing import (
     check_admission_log,
     check_batch_structure,
+    foreach_phase,
+    scoped_conf,
     stage_phase_files,
 )
-
-_SEQ = itertools.count()
 
 
 def _merge_versions(
@@ -123,16 +122,14 @@ def scd2_stream_phased(
     queries' state_partitions): each micro-batch runs several small
     exchanges, and per-partition task overhead dominates over a
     batch-sized keyspace. Restored after the bounded run."""
-    root = tempfile.mkdtemp(prefix="scd2_stream_")
-    input_dir = os.path.join(root, "input")
-    store_dir = os.path.join(root, "store")
-    ckpt = os.path.join(root, "ckpt")
     cols = [key_col, ts_col, *attr_cols, tiebreak_col]
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="scd2_stream_", ignore_cleanup_errors=True
+    ) as root:
+        store_dir = os.path.join(root, "store")
         phase_counts = stage_phase_files(
-            [p.select(*cols) for p in phases], input_dir
+            [p.select(*cols) for p in phases], os.path.join(root, "input")
         )
-        schema = spark.read.parquet(input_dir).schema
 
         def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
             sp = batch_df.sparkSession
@@ -159,36 +156,19 @@ def scd2_stream_phased(
                 shutil.rmtree(store_dir)
             os.rename(tmp, store_dir)
 
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        if shuffle_partitions is not None:
-            spark.conf.set(
-                "spark.sql.shuffle.partitions", str(shuffle_partitions)
-            )
-        try:
-            q = (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", "1")
-                .parquet(input_dir)
-                .writeStream.foreachBatch(apply_batch)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .queryName(f"scd2_stream_{next(_SEQ)}")
-                .start()
-            )
-            q.awaitTermination()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        data = check_batch_structure(
-            list(q.recentProgress), phase_counts, "scd2_stream_phased"
+        with scoped_conf(
+            spark, {"spark.sql.shuffle.partitions": shuffle_partitions}
+        ):
+            progress = foreach_phase(spark, root, apply_batch, "scd2_stream")
+        data = check_batch_structure(progress, phase_counts, "scd2_stream_phased")
+        check_admission_log(
+            os.path.join(root, "ckpt"), len(phase_counts), "scd2_stream_phased"
         )
-        check_admission_log(ckpt, len(phase_counts), "scd2_stream_phased")
         # each generation leaves one file per shuffle partition —
         # compact under the footer-count invariant before the final
         # readout so the maintained table hands off scanner-sized files
         compaction = compact_store(spark, store_dir, cluster_by=[key_col])
         result = spark.read.parquet(store_dir).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
     stats = {
         "data_batches": len(data),
         "rows_per_batch": [p["numInputRows"] for p in data],

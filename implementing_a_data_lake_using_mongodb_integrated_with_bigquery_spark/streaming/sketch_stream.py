@@ -23,7 +23,6 @@ never a read-and-overwrite of the same parquet path.
 
 from __future__ import annotations
 
-import itertools
 import os
 import shutil
 import tempfile
@@ -40,10 +39,10 @@ from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.sourc
 from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.streaming.phasing import (
     check_admission_log,
     check_batch_structure,
+    foreach_phase,
+    scoped_conf,
     stage_phase_files,
 )
-
-_SEQ = itertools.count()
 
 
 def cms_stream_phased(
@@ -60,15 +59,13 @@ def cms_stream_phased(
     Each batch: one batch-local count + sketch build (≤ depth×width
     rows), then a (seed, bucket) integer-sum merge into the stored
     grid — |batch|-sized work, grid-sized state."""
-    root = tempfile.mkdtemp(prefix="cms_stream_")
-    input_dir = os.path.join(root, "input")
-    store_dir = os.path.join(root, "store")
-    ckpt = os.path.join(root, "ckpt")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="cms_stream_", ignore_cleanup_errors=True
+    ) as root:
+        store_dir = os.path.join(root, "store")
         phase_counts = stage_phase_files(
-            [p.select(key_col) for p in phases], input_dir
+            [p.select(key_col) for p in phases], os.path.join(root, "input")
         )
-        schema = spark.read.parquet(input_dir).schema
 
         def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
             sp = batch_df.sparkSession
@@ -89,36 +86,19 @@ def cms_stream_phased(
                 shutil.rmtree(store_dir)
             os.rename(tmp, store_dir)
 
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        if shuffle_partitions is not None:
-            spark.conf.set(
-                "spark.sql.shuffle.partitions", str(shuffle_partitions)
-            )
-        try:
-            q = (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", "1")
-                .parquet(input_dir)
-                .writeStream.foreachBatch(apply_batch)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .queryName(f"cms_stream_{next(_SEQ)}")
-                .start()
-            )
-            q.awaitTermination()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        data = check_batch_structure(
-            list(q.recentProgress), phase_counts, "cms_stream_phased"
+        with scoped_conf(
+            spark, {"spark.sql.shuffle.partitions": shuffle_partitions}
+        ):
+            progress = foreach_phase(spark, root, apply_batch, "cms_stream")
+        data = check_batch_structure(progress, phase_counts, "cms_stream_phased")
+        check_admission_log(
+            os.path.join(root, "ckpt"), len(phase_counts), "cms_stream_phased"
         )
-        check_admission_log(ckpt, len(phase_counts), "cms_stream_phased")
         # grid-sized store (depth×width rows) still fragments into one
         # file per shuffle partition per generation — compact under the
         # footer-count invariant before the readout
         compaction = compact_store(spark, store_dir)
         result = spark.read.parquet(store_dir).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
     stats = {
         "data_batches": len(data),
         "rows_per_batch": [p["numInputRows"] for p in data],

@@ -11,10 +11,19 @@ from __future__ import annotations
 
 import itertools
 import os
+import tempfile
+from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.streaming.phasing import (
+    check_admission_log,
+    check_batch_structure,
+    scoped_conf,
+    stage_phase_files,
+)
 
 _SINK_SEQ = itertools.count()
 
@@ -177,13 +186,9 @@ def windowed_counts_once_rocksdb(
     actually engaged by reading the state operator's RocksDB-specific
     custom metrics from the final progress (a silently ignored conf
     must fail loudly, not 'pass' on the default provider)."""
-    key = "spark.sql.streaming.stateStore.providerClass"
-    try:
-        prev = spark.conf.get(key)
-    except Exception:
-        prev = None
-    spark.conf.set(key, ROCKSDB_PROVIDER)
-    try:
+    with scoped_conf(
+        spark, {"spark.sql.streaming.stateStore.providerClass": ROCKSDB_PROVIDER}
+    ):
         stream, ntz_event_time = _open_event_stream(spark, events_path, ts_col)
         out = windowed_counts(stream, ts_col, duration, lateness, group_cols, aggs)
         sink = f"windowed_counts_rocksdb_{next(_SINK_SEQ)}"
@@ -216,11 +221,6 @@ def windowed_counts_once_rocksdb(
         # pin rows before the conf (and the memory sink's registration)
         # can change under a later query in the same session
         return result.localCheckpoint(eager=True)
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
 
 
 def session_windows_once(
@@ -278,10 +278,7 @@ def session_windows_once(
     # keyspace, so size to the group-key cardinality, not the CPU
     # count; restored after the bounded run (a production deployment
     # pins this once via its checkpoint).
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": state_partitions}):
         q = (
             out.writeStream.format("memory")
             .queryName(sink)
@@ -308,14 +305,26 @@ def session_windows_once(
                 "one (watermark still 0 on arrival). Coalesce the input "
                 "or extend the oracle to model per-batch watermarks."
             )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     result = spark.table(sink)
     if ntz_event_time:
         result = result.withColumn(
             "session_start", F.col("session_start").cast("timestamp_ntz")
         ).withColumn("session_end", F.col("session_end").cast("timestamp_ntz"))
     return result
+
+
+def _restart_run(
+    run_phase: Callable[[], list], phase: DataFrame, input_dir: str, i: int, where: str
+) -> list:
+    """One run of a two-run checkpoint restart: stage ``phase`` as file
+    ``i`` of ``input_dir`` (after run ``i`` − 1 committed its offsets),
+    run the query once more on the shared checkpoint, and guard that
+    the run admitted the whole phase as exactly one data micro-batch.
+    Returns the run's progress."""
+    counts = stage_phase_files([phase], input_dir, start=i)
+    progress = run_phase()
+    check_batch_structure(progress, counts, f"{where} run {i + 1}")
+    return progress
 
 
 def restart_session_windows(
@@ -345,58 +354,45 @@ def restart_session_windows(
     one; the oracle must model exactly that), and the final watermark
     W2 emits every session it passes. Returns (emissions-union, stats).
     """
-    import os as _os
-    import shutil
-    import tempfile
-
     group_cols = group_cols if group_cols is not None else ["user_id"]
-    root = tempfile.mkdtemp(prefix="restart_sessions_")
-    input_dir = _os.path.join(root, "input")
-    ckpt = _os.path.join(root, "ckpt")
-    out_dir = _os.path.join(root, "out")
-    stage2 = _os.path.join(root, "p2stage")
-    phase1.coalesce(1).write.parquet(input_dir)
-
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-
     ntz_event_time = False
+    with tempfile.TemporaryDirectory(
+        prefix="restart_sessions_", ignore_cleanup_errors=True
+    ) as root, scoped_conf(
+        spark, {"spark.sql.shuffle.partitions": state_partitions}
+    ):
+        input_dir = os.path.join(root, "input")
+        ckpt = os.path.join(root, "ckpt")
+        out_dir = os.path.join(root, "out")
 
-    def run_phase() -> list:
-        nonlocal ntz_event_time
-        stream, ntz_event_time = _open_event_stream(spark, input_dir, ts_col)
-        aggd = (
-            stream.withWatermark(ts_col, lateness)
-            .groupBy(F.session_window(ts_col, gap).alias("w"), *group_cols)
-            .agg(F.count(F.lit(1)).cast("long").alias("n_events"))
-        )
-        out = aggd.select(
-            *group_cols,
-            F.col("w.start").alias("session_start"),
-            F.col("w.end").alias("session_end"),
-            "n_events",
-        )
-        q = (
-            out.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return list(q.recentProgress)
+        def run_phase() -> list:
+            nonlocal ntz_event_time
+            stream, ntz_event_time = _open_event_stream(spark, input_dir, ts_col)
+            aggd = (
+                stream.withWatermark(ts_col, lateness)
+                .groupBy(F.session_window(ts_col, gap).alias("w"), *group_cols)
+                .agg(F.count(F.lit(1)).cast("long").alias("n_events"))
+            )
+            out = aggd.select(
+                *group_cols,
+                F.col("w.start").alias("session_start"),
+                F.col("w.end").alias("session_end"),
+                "n_events",
+            )
+            q = (
+                out.writeStream.format("parquet")
+                .option("path", out_dir)
+                .option("checkpointLocation", ckpt)
+                .outputMode("append")
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
+            return list(q.recentProgress)
 
-    try:
-        prog1 = run_phase()
-        phase2.coalesce(1).write.parquet(stage2)
-        for f in _os.listdir(stage2):
-            if f.endswith(".parquet"):
-                _os.link(
-                    _os.path.join(stage2, f), _os.path.join(input_dir, f"p2-{f}")
-                )
-        prog2 = run_phase()
+        prog1 = _restart_run(run_phase, phase1, input_dir, 0, "restart_session_windows")
+        prog2 = _restart_run(run_phase, phase2, input_dir, 1, "restart_session_windows")
+        check_admission_log(ckpt, 2, "restart_session_windows")
         result = spark.read.parquet(out_dir)
         if ntz_event_time:
             result = result.withColumn(
@@ -405,9 +401,6 @@ def restart_session_windows(
                 "session_end", F.col("session_end").cast("timestamp_ntz")
             )
         result = result.localCheckpoint(eager=True)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        shutil.rmtree(root, ignore_errors=True)
 
     def facts(progress: list) -> dict:
         data = [p for p in progress if p["numInputRows"] > 0]
@@ -446,52 +439,37 @@ def restart_stream_dedup(
     (emissions-union, stats); emitted ROW choice within a batch is
     partition-order-nondeterministic, so callers must aggregate to
     per-key emission counts (deterministic under the rules above)."""
-    import os as _os
-    import shutil
-    import tempfile
-
     key_cols = key_cols or ["user_id", "event_type"]
-    root = tempfile.mkdtemp(prefix="restart_dedup_")
-    input_dir = _os.path.join(root, "input")
-    ckpt = _os.path.join(root, "ckpt")
-    out_dir = _os.path.join(root, "out")
-    stage2 = _os.path.join(root, "p2stage")
-    phase1.coalesce(1).write.parquet(input_dir)
+    with tempfile.TemporaryDirectory(
+        prefix="restart_dedup_", ignore_cleanup_errors=True
+    ) as root, scoped_conf(
+        spark, {"spark.sql.shuffle.partitions": state_partitions}
+    ):
+        input_dir = os.path.join(root, "input")
+        ckpt = os.path.join(root, "ckpt")
+        out_dir = os.path.join(root, "out")
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
+        def run_phase() -> list:
+            stream, _ntz = _open_event_stream(spark, input_dir, ts_col)
+            deduped = stream.withWatermark(
+                ts_col, delay
+            ).dropDuplicatesWithinWatermark(key_cols)
+            q = (
+                deduped.select(*key_cols)
+                .writeStream.format("parquet")
+                .option("path", out_dir)
+                .option("checkpointLocation", ckpt)
+                .outputMode("append")
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
+            return list(q.recentProgress)
 
-    def run_phase() -> list:
-        stream, _ntz = _open_event_stream(spark, input_dir, ts_col)
-        deduped = stream.withWatermark(
-            ts_col, delay
-        ).dropDuplicatesWithinWatermark(key_cols)
-        q = (
-            deduped.select(*key_cols)
-            .writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return list(q.recentProgress)
-
-    try:
-        prog1 = run_phase()
-        phase2.coalesce(1).write.parquet(stage2)
-        for f in _os.listdir(stage2):
-            if f.endswith(".parquet"):
-                _os.link(
-                    _os.path.join(stage2, f), _os.path.join(input_dir, f"p2-{f}")
-                )
-        prog2 = run_phase()
+        prog1 = _restart_run(run_phase, phase1, input_dir, 0, "restart_stream_dedup")
+        prog2 = _restart_run(run_phase, phase2, input_dir, 1, "restart_stream_dedup")
+        check_admission_log(ckpt, 2, "restart_stream_dedup")
         result = spark.read.parquet(out_dir).localCheckpoint(eager=True)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        shutil.rmtree(root, ignore_errors=True)
 
     def facts(progress: list) -> dict:
         data = [p for p in progress if p["numInputRows"] > 0]
@@ -542,55 +520,42 @@ def restart_append_counts(
     count) — kept out of the operator so data-dependent expectations
     live with the data that justifies them.
     """
-    import os as _os
-    import shutil
-    import tempfile
-
     group_cols = group_cols or []
-    root = tempfile.mkdtemp(prefix="restart_stream_")
-    input_dir = _os.path.join(root, "input")
-    ckpt = _os.path.join(root, "ckpt")
-    out_dir = _os.path.join(root, "out")
-    stage2 = _os.path.join(root, "p2stage")
-    phase1.coalesce(1).write.parquet(input_dir)
-
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-
     ntz_event_time = False
+    with tempfile.TemporaryDirectory(
+        prefix="restart_stream_", ignore_cleanup_errors=True
+    ) as root, scoped_conf(
+        spark, {"spark.sql.shuffle.partitions": state_partitions}
+    ):
+        input_dir = os.path.join(root, "input")
+        ckpt = os.path.join(root, "ckpt")
+        out_dir = os.path.join(root, "out")
 
-    def run_phase() -> list:
-        # the memory sink cannot recover from a checkpoint — the
-        # restart needs a fault-tolerant sink, and the parquet file
-        # sink (with its own transactional _spark_metadata log) is
-        # exactly what a production append stream lands in
-        nonlocal ntz_event_time
-        stream, ntz_event_time = _open_event_stream(spark, input_dir, ts_col)
-        out = windowed_counts(
-            stream, ts_col, duration, lateness, group_cols, aggs
-        )
-        q = (
-            out.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return list(q.recentProgress)
+        def run_phase() -> list:
+            # the memory sink cannot recover from a checkpoint — the
+            # restart needs a fault-tolerant sink, and the parquet file
+            # sink (with its own transactional _spark_metadata log) is
+            # exactly what a production append stream lands in
+            nonlocal ntz_event_time
+            stream, ntz_event_time = _open_event_stream(spark, input_dir, ts_col)
+            out = windowed_counts(
+                stream, ts_col, duration, lateness, group_cols, aggs
+            )
+            q = (
+                out.writeStream.format("parquet")
+                .option("path", out_dir)
+                .option("checkpointLocation", ckpt)
+                .outputMode("append")
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
+            return list(q.recentProgress)
 
-    try:
-        prog1 = run_phase()
         # phase 2 lands as a NEW file in the same source directory
-        phase2.coalesce(1).write.parquet(stage2)
-        for f in _os.listdir(stage2):
-            if f.endswith(".parquet"):
-                _os.link(
-                    _os.path.join(stage2, f), _os.path.join(input_dir, f"p2-{f}")
-                )
-        prog2 = run_phase()
+        prog1 = _restart_run(run_phase, phase1, input_dir, 0, "restart_append_counts")
+        prog2 = _restart_run(run_phase, phase2, input_dir, 1, "restart_append_counts")
+        check_admission_log(ckpt, 2, "restart_append_counts")
         # both runs' emissions accumulate in the file sink's log
         result = spark.read.parquet(out_dir)
         if ntz_event_time:
@@ -598,9 +563,6 @@ def restart_append_counts(
                 "window_start", F.col("window_start").cast("timestamp_ntz")
             ).withColumn("window_end", F.col("window_end").cast("timestamp_ntz"))
         result = result.localCheckpoint(eager=True)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        shutil.rmtree(root, ignore_errors=True)
 
     def facts(progress: list) -> dict:
         data = [p for p in progress if p["numInputRows"] > 0]
@@ -624,16 +586,7 @@ def restart_append_counts(
             "rocksdb": rocksdb,
         }
 
-    stats = {"phase1": facts(prog1), "phase2": facts(prog2)}
-    for tag in ("phase1", "phase2"):
-        if stats[tag]["data_batches"] != 1:
-            raise RuntimeError(
-                f"restart_append_counts {tag} replayed "
-                f"{stats[tag]['data_batches']} data micro-batches; the "
-                "two-phase oracle models exactly one per run (one file "
-                "per phase by construction)."
-            )
-    return result, stats
+    return result, {"phase1": facts(prog1), "phase2": facts(prog2)}
 
 
 def update_merge_counts_once(
@@ -700,9 +653,6 @@ def _update_merge_run(
     mode, land every micro-batch through the keyed K4 MERGE, read the
     final store back. Returns (result, recentProgress list) so phased
     callers can assert the micro-batch structure."""
-    import shutil
-    import tempfile
-
     from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.streaming import (
         cdc_merge,
     )
@@ -714,8 +664,6 @@ def _update_merge_run(
         stream, ts_col, duration, lateness, group_cols, None
     ).select("window_start", "window_end", *group_cols, "n_events")
     out_cols = out.columns
-
-    store = tempfile.mkdtemp(prefix="update_merge_store_")
 
     def merge(batch_df: DataFrame, _batch_id: int) -> None:
         sp = batch_df.sparkSession
@@ -739,10 +687,11 @@ def _update_merge_run(
     # state-partition sizing, same reasoning as session_windows_once:
     # per-partition state-store open/commit cost dominates over a small
     # keyspace; restored after the bounded run
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
+    with scoped_conf(
+        spark, {"spark.sql.shuffle.partitions": state_partitions}
+    ), tempfile.TemporaryDirectory(
+        prefix="update_merge_store_", ignore_cleanup_errors=True
+    ) as store:
         writer = (
             out.writeStream.foreachBatch(merge)
             .outputMode("update")
@@ -757,10 +706,6 @@ def _update_merge_run(
             result = spark.createDataFrame([], out.schema)
         else:
             result = final.select(*out_cols).localCheckpoint(eager=True)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        # in the finally so a failed stream doesn't leak the temp store
-        shutil.rmtree(store, ignore_errors=True)
     if ntz_event_time:
         result = result.withColumn(
             "window_start", F.col("window_start").cast("timestamp_ntz")
@@ -808,20 +753,11 @@ def update_merge_phased(
     hash-mismatching the oracle. Phase sizes come free from the staged
     files' parquet footers — no extra Spark jobs.
     """
-    import os as _os
-    import shutil
-    import tempfile
-
-    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.streaming.phasing import (
-        check_admission_log,
-        check_batch_structure,
-        stage_phase_files,
-    )
-
-    root = tempfile.mkdtemp(prefix="update_merge_phased_")
-    input_dir = _os.path.join(root, "input")
-    ckpt = _os.path.join(root, "ckpt")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="update_merge_phased_", ignore_cleanup_errors=True
+    ) as root:
+        input_dir = os.path.join(root, "input")
+        ckpt = os.path.join(root, "ckpt")
         phase_counts = stage_phase_files(phases, input_dir)
         result, progress = _update_merge_run(
             spark,
@@ -837,8 +773,6 @@ def update_merge_phased(
         # path-exact phase→batch guard (counts can collide across
         # equal-sized phases; the checkpoint's source log cannot)
         check_admission_log(ckpt, len(phases), "update_merge_phased")
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
     data = check_batch_structure(progress, phase_counts, "update_merge_phased")
     stats = {
@@ -887,21 +821,13 @@ def dedup_then_window_phased(
     Returns (result, stats); stats carries the count and path-exact
     batch-structure guards.
     """
-    import shutil
-    import tempfile
-
-    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.streaming.phasing import (
-        check_admission_log,
-        check_batch_structure,
-        stage_phase_files,
-    )
-
     group_cols = group_cols or []
-    root = tempfile.mkdtemp(prefix="dedup_then_window_")
-    input_dir = os.path.join(root, "input")
-    ckpt = os.path.join(root, "ckpt")
     sink = f"dedup_then_window_{next(_SINK_SEQ)}"
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="dedup_then_window_", ignore_cleanup_errors=True
+    ) as root:
+        input_dir = os.path.join(root, "input")
+        ckpt = os.path.join(root, "ckpt")
         phase_counts = stage_phase_files(phases, input_dir)
         stream, ntz_event_time = _open_event_stream(
             spark, input_dir, ts_col, max_files_per_trigger=1
@@ -919,10 +845,9 @@ def dedup_then_window_phased(
                 "n_events",
             )
         )
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        if state_partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-        try:
+        with scoped_conf(
+            spark, {"spark.sql.shuffle.partitions": state_partitions}
+        ):
             q = (
                 out.writeStream.format("memory")
                 .queryName(sink)
@@ -932,16 +857,12 @@ def dedup_then_window_phased(
                 .start()
             )
             q.awaitTermination()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
         data = check_batch_structure(
             list(q.recentProgress), phase_counts, "dedup_then_window_phased"
         )
         check_admission_log(ckpt, len(phase_counts), "dedup_then_window_phased")
         # the memory sink's rows survive the temp-dir cleanup; pin them
         result = spark.table(sink).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
     if ntz_event_time:
         result = result.withColumn(
             "window_start", F.col("window_start").cast("timestamp_ntz")
@@ -1092,73 +1013,57 @@ def restart_two_level_counts(
     (phase1 ∪ admitted phase2); ``n_quarters`` counts kept-row
     quarters, proving the rollup rebuilt through restored
     intermediate state."""
-    import os as _os
-    import shutil
-    import tempfile
-
     group_cols = group_cols or []
-    root = tempfile.mkdtemp(prefix="restart_two_level_")
-    input_dir = _os.path.join(root, "input")
-    ckpt = _os.path.join(root, "ckpt")
-    out_dir = _os.path.join(root, "out")
-    stage2 = _os.path.join(root, "p2stage")
-    phase1.coalesce(1).write.parquet(input_dir)
-
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-
     ntz_event_time = False
+    with tempfile.TemporaryDirectory(
+        prefix="restart_two_level_", ignore_cleanup_errors=True
+    ) as root, scoped_conf(
+        spark, {"spark.sql.shuffle.partitions": state_partitions}
+    ):
+        input_dir = os.path.join(root, "input")
+        ckpt = os.path.join(root, "ckpt")
+        out_dir = os.path.join(root, "out")
 
-    def run_phase() -> list:
-        nonlocal ntz_event_time
-        stream, ntz_event_time = _open_event_stream(spark, input_dir, ts_col)
-        lvl1 = (
-            stream.withWatermark(ts_col, lateness)
-            .groupBy(F.window(ts_col, quarter).alias("qw"), *group_cols)
-            .agg(F.count(F.lit(1)).cast("long").alias("qn"))
-        )
-        out = (
-            lvl1.groupBy(
-                F.window(F.window_time("qw"), hour).alias("hw"), *group_cols
+        def run_phase() -> list:
+            nonlocal ntz_event_time
+            stream, ntz_event_time = _open_event_stream(spark, input_dir, ts_col)
+            lvl1 = (
+                stream.withWatermark(ts_col, lateness)
+                .groupBy(F.window(ts_col, quarter).alias("qw"), *group_cols)
+                .agg(F.count(F.lit(1)).cast("long").alias("qn"))
             )
-            .agg(
-                F.sum("qn").cast("long").alias("n_events"),
-                F.count(F.lit(1)).cast("long").alias("n_quarters"),
-            )
-            .withColumn("window_start", F.col("hw.start"))
-            .withColumn("window_end", F.col("hw.end"))
-            .drop("hw")
-        )
-        q = (
-            out.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return list(q.recentProgress)
-
-    try:
-        prog1 = run_phase()
-        phase2.coalesce(1).write.parquet(stage2)
-        for f in _os.listdir(stage2):
-            if f.endswith(".parquet"):
-                _os.link(
-                    _os.path.join(stage2, f), _os.path.join(input_dir, f"p2-{f}")
+            out = (
+                lvl1.groupBy(
+                    F.window(F.window_time("qw"), hour).alias("hw"), *group_cols
                 )
-        prog2 = run_phase()
+                .agg(
+                    F.sum("qn").cast("long").alias("n_events"),
+                    F.count(F.lit(1)).cast("long").alias("n_quarters"),
+                )
+                .withColumn("window_start", F.col("hw.start"))
+                .withColumn("window_end", F.col("hw.end"))
+                .drop("hw")
+            )
+            q = (
+                out.writeStream.format("parquet")
+                .option("path", out_dir)
+                .option("checkpointLocation", ckpt)
+                .outputMode("append")
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
+            return list(q.recentProgress)
+
+        prog1 = _restart_run(run_phase, phase1, input_dir, 0, "restart_two_level_counts")
+        prog2 = _restart_run(run_phase, phase2, input_dir, 1, "restart_two_level_counts")
+        check_admission_log(ckpt, 2, "restart_two_level_counts")
         result = spark.read.parquet(out_dir)
         if ntz_event_time:
             result = result.withColumn(
                 "window_start", F.col("window_start").cast("timestamp_ntz")
             ).withColumn("window_end", F.col("window_end").cast("timestamp_ntz"))
         result = result.localCheckpoint(eager=True)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        shutil.rmtree(root, ignore_errors=True)
 
     def facts(progress: list) -> dict:
         data = [p for p in progress if p["numInputRows"] > 0]
